@@ -9,12 +9,12 @@ operators/kmeans.py, reusing its engine-parity discipline.
 Spark-first plan: the EDGE relation (the 100 TB side) is hash-
 partitioned by src ONCE and persist()ed — persist, not
 localCheckpoint, so Catalyst keeps the hashpartitioning(src) metadata
-and every iteration's join reuses it (the lesson pinned by
-tests/test_kmeans.py). Per iteration only the node-count-sized rank
-relation crosses the wire: join on src (ranks exchange to meet the
-edges), groupBy(dst).sum with map-side partials (power-law in-degree
-hubs combine locally before the exchange), then localCheckpoint to cut
-lineage so round t+1 never re-executes round t.
+and every iteration's join reuses it (a checkpoint scans back with
+UNKNOWN partitioning and is re-exchanged). Per iteration only the
+node-count-sized rank relation crosses the wire: join on src (ranks
+exchange to meet the edges), groupBy(dst).sum with map-side partials
+(power-law in-degree hubs combine locally before the exchange), then
+localCheckpoint to cut lineage so round t+1 never re-executes round t.
 
 Determinism: ranks are scaled to sum to N (r0 = 1.0, the "rank mass"
 form) so they stay O(1), and each iteration rounds to 6 dp AFTER the

@@ -7,24 +7,25 @@ Celeborn has no ML operators — this extends the §2C similarity surface
 real centroid training (queries/similarity.py uses fixed every-Nth-row
 centroids; `lloyd_iterations` is how those become data-driven).
 
-Spark-first plan: lloyd_iterations hash-partitions the projected
-(id, vec) relation by id ONCE and localCheckpoints it; from then on
-  assign  — crossJoin(broadcast(centroids)) + min-distance window:
-            the window's partitionBy(id) is satisfied by the existing
-            id-partitioning, so no exchange;
-  update  — join assignment (window output, also id-partitioned) back
-            to the vectors — again no exchange — then posexplode ->
-            groupBy(cluster, pos).avg (map-side partials): the ONLY
-            per-iteration shuffle is k x dim mean rows.
-So the vector table crosses the wire exactly once for the whole fit
-(tests/test_kmeans.py pins the per-iteration exchange count), centroids
-stay broadcast-sized (k x dim doubles), and each iteration's centroid
-DF is localCheckpoint'ed so lineage (and thus re-execution of every
-prior iteration) does not grow with iters — the same discipline as
-operators/components.py label propagation. (At toy scale the cache
-machinery costs more than it saves — ~1 s at sf0.1 — but it is the
-100 TB-correct default, the same input-caching choice Spark MLlib's
-KMeans makes; the cache is released when the fit returns.)
+Spark-first plan: the k x dim centroids live on the DRIVER, as MLlib's
+KMeans keeps them — they are tiny at any corpus scale. A fit is
+  seeds   — one collect of the k lowest-id rows;
+  round   — ONE action: a map-only projection picks each vector's
+            nearest centroid with array_min over a transform of the
+            centroid constant (struct order (dist, cluster) is the
+            tie-break), then posexplode -> groupBy(cluster, pos).avg
+            collects the k x dim means. Catalyst plans partial + final
+            aggregation, so only the map-combined means cross the
+            exchange (Celeborn's map-side combine, SURVEY.md §A3) —
+            the vectors are never shuffled, joined, windowed, cached
+            or checkpointed;
+  result  — a lazy select over the input that assigns every vector to
+            the final centroids; nothing to release afterwards.
+The centroid constant is ONE plan node (from_json of a JSON literal,
+constant-folded at optimization): a Column tree of per-element F.lit
+calls pays a py4j round trip per node. Python's shortest float repr and
+Java's Double.parseDouble round-trip every double bit-exactly
+(tests/test_kmeans.py pins 0.1 + 0.2, 1e-300 and -0.0).
 
 Determinism: seeds are the k lowest-id vectors (cluster id = seed's
 vec_id), distances are rounded to 6 dp with cluster-id tie-break, and
@@ -35,9 +36,12 @@ the DuckDB mirror (same trick as embedding_near_dup_oracle_sql).
 
 from __future__ import annotations
 
+import json
+from collections.abc import Sequence
+from itertools import groupby
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from celeborn_spark.operators.similarity import as_double_array
 
@@ -55,62 +59,31 @@ def l2_dist(a: Column, b: Column) -> Column:
     )
 
 
-def assign_clusters(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cluster, dist): each vector's nearest centroid (distance
-    rounded 6 dp, ties -> lowest cluster id). Centroids broadcast."""
-    v = vectors.select(F.col(id_col), as_double_array(vec_col).alias("v"))
-    scored = v.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist", F.round(l2_dist(F.col("v"), F.col("c")), 6)
-    )
-    w = W.partitionBy(id_col).orderBy("dist", "cluster")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "cluster", "dist")
+def centroid_column(
+    centroids: Sequence[tuple[object, Sequence[float | None]]],
+    cluster_type: str = "bigint",
+) -> Column:
+    """The driver-side centroids [(cluster, c), ...] as one constant
+    array<struct<cluster, c: array<double>>> Column. A single JSON
+    literal parsed by from_json keeps the plan at one node whatever k x
+    dim is, and the doubles round-trip exactly."""
+    doc = json.dumps([{"cluster": cl, "c": list(c)} for cl, c in centroids])
+    return F.from_json(
+        F.lit(doc), f"array<struct<cluster: {cluster_type}, c: array<double>>>"
     )
 
 
-def update_centroids(
-    vectors: DataFrame,
-    assignment: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(cluster, c): element-wise mean of each cluster's vectors,
-    components rounded 6 dp (cross-engine reproducibility of the next
-    assignment). posexplode -> one groupBy(cluster, pos) exchange with
-    map-side partials -> array rebuild."""
-    dims = (
-        vectors.join(assignment.select(id_col, "cluster"), id_col)
-        .select("cluster", F.posexplode(as_double_array(vec_col)).alias("pos", "x"))
-    )
-    means = dims.groupBy("cluster", "pos").agg(F.round(F.avg("x"), 6).alias("m"))
-    return means.groupBy("cluster").agg(
+def nearest_centroid(v: Column, centroids: Column) -> Column:
+    """struct(dist, cluster) of the centroid nearest to `v`: distance
+    rounded 6 dp, ties -> lowest cluster id (struct field order)."""
+    return F.array_min(
         F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("c")
-    )
-
-
-def prepared_vectors(
-    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Partition the slim (id, vec) projection by id ONCE and cache it:
-    every iteration's window (partitionBy id) and assignment join reuse
-    the partitioning, so the vectors shuffle exactly once for the whole
-    fit instead of once per round. persist(), NOT localCheckpoint():
-    a checkpoint scans back as an opaque RDD with UNKNOWN partitioning
-    and Catalyst re-exchanges anyway; a cached plan keeps the
-    hashpartitioning(id) metadata (test_kmeans pins this)."""
-    return (
-        vectors.select(F.col(id_col), as_double_array(vec_col).alias(vec_col))
-        .repartition(vectors.sparkSession.sparkContext.defaultParallelism, id_col)
-        .persist()
+            centroids,
+            lambda s: F.struct(
+                F.round(l2_dist(v, s["c"]), 6).alias("dist"),
+                s["cluster"].alias("cluster"),
+            ),
+        )
     )
 
 
@@ -123,27 +96,35 @@ def lloyd_iterations(
 ) -> DataFrame:
     """Fit k-means for `iters` Lloyd rounds from deterministic seeds
     (the k lowest-id vectors; cluster id = seed id) and return the final
-    assignment (id, cluster, dist)."""
+    assignment (id, cluster, dist) as a lazy DataFrame."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    seeds = vectors.orderBy(id_col).limit(k)
-    centroids = seeds.select(
-        F.col(id_col).alias("cluster"), as_double_array(vec_col).alias("c")
-    ).localCheckpoint()
-    v = prepared_vectors(vectors, id_col, vec_col)
+    cluster_type = vectors.schema[id_col].dataType.simpleString()
+    v = vectors.select(F.col(id_col), as_double_array(vec_col).alias("v"))
+    # driver-side centroids: bounded by k rows of dim doubles
+    centroids = [tuple(r) for r in v.orderBy(id_col).limit(k).collect()]
     for _ in range(iters):
-        assignment = assign_clusters(v, centroids, id_col, vec_col)
-        centroids = update_centroids(
-            v, assignment, id_col, vec_col
-        ).localCheckpoint()  # cut lineage: next round must not re-run this one
-    # materialize the slim final assignment, then release the vector
-    # cache — without this every fit leaks one InMemoryRelation into
-    # the executor cache for the life of the session
-    final = assign_clusters(v, centroids, id_col, vec_col).localCheckpoint()
-    v.unpersist()
-    return final
+        cents = centroid_column(centroids, cluster_type)
+        # the assignment is its own projection BELOW the Generate: fused
+        # into the posexplode projection, the HOF re-runs per element
+        nearest = nearest_centroid(F.col("v"), cents)
+        assigned = v.select(nearest["cluster"].alias("cluster"), "v")
+        # bounded: at most k x dim mean rows reach the driver
+        means = sorted(
+            assigned.select("cluster", F.posexplode("v").alias("pos", "x"))
+            .groupBy("cluster", "pos")
+            .agg(F.round(F.avg("x"), 6).alias("m"))
+            .collect()
+        )
+        # a cluster no vector chose drops out, as in the SQL mirror
+        centroids = [
+            (cluster, [m for _, _, m in rows])
+            for cluster, rows in groupby(means, key=lambda r: r[0])
+        ]
+    best = nearest_centroid(F.col("v"), centroid_column(centroids, cluster_type))
+    return v.select(id_col, best.alias("a")).select(id_col, "a.cluster", "a.dist")
 
 
 def kmeans_oracle_sql(

@@ -287,9 +287,9 @@ def q_embedding_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-means (2 Lloyd rounds, k=4) over the embeddings table: the
-    iterative-algorithm class beyond connected components — broadcast
-    centroids, one vector-table pass per round, localCheckpoint'ed
-    lineage (operators/kmeans.py)."""
+    iterative-algorithm class beyond connected components — centroids
+    kept on the driver, one map-combined job per round
+    (operators/kmeans.py)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return K.lloyd_iterations(emb, k=4, iters=2)
 

@@ -159,11 +159,14 @@ def compact_parquet(
 
     The operational fix for streaming/micro-batch sinks that accrete
     thousands of tiny files — at 100 TB, listing and footer overhead on
-    an uncompacted directory dominates scan time. Staged via
-    localCheckpoint before the overwrite (rewriting one's own input is
-    otherwise a read-write race on the same files)."""
+    an uncompacted directory dominates scan time. The rewrite goes to a
+    sibling staging directory (``<path>.compact-staging``) and is swapped
+    in with two renames only after the write succeeded: the originals
+    are never deleted before the compacted copy is committed on disk, so
+    a failed write leaves the table as it was."""
     import math
     import os as _os
+    import shutil
 
     # Input sizing walks the LOCAL filesystem; on an object-store/DFS URI
     # os.walk silently yields total=0 → n_files=1 → the whole dataset
@@ -188,13 +191,27 @@ def compact_parquet(
     if total == 0:
         raise ValueError(f"no parquet data found under {path!r}; refusing to rewrite")
     n_files = max(1, math.ceil(total / target_file_bytes))
+    staging = path.rstrip("/") + ".compact-staging"
+    local_staging = local.rstrip("/") + ".compact-staging"
+    local_old = local.rstrip("/") + ".compact-old"
+    if _os.path.isdir(local_staging):
+        # left by an interrupted compaction; the originals are intact
+        shutil.rmtree(local_staging)
     df = spark.read.parquet(path)
-    staged = (
+    (
         df.repartitionByRange(n_files, sort_col).sortWithinPartitions(sort_col)
         if sort_col
         else df.repartition(n_files)
-    ).localCheckpoint()
-    staged.write.mode("overwrite").parquet(path)
+    ).write.parquet(staging)  # default mode: refuses an existing path
+    _os.rename(local, local_old)
+    try:
+        _os.rename(local_staging, local)
+    except BaseException:
+        _os.rename(local_old, local)
+        raise
+    shutil.rmtree(local_old)
+    # drop cached plans over the old files, as an overwrite would
+    spark.catalog.refreshByPath(path)
     return n_files
 
 

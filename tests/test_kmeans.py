@@ -1,6 +1,6 @@
 """k-means Lloyd iterations: convergence (SSE non-increasing per
-round), total assignment, determinism, and the broadcast-centroid plan
-shape."""
+round), total assignment, determinism, the driver-resident centroid plan
+shape and the exactness of the centroid constant."""
 
 from __future__ import annotations
 
@@ -42,36 +42,46 @@ def test_deterministic_across_runs(spark, sf_dir):
     assert a == b
 
 
-def test_assign_broadcasts_centroids(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.orderBy("vec_id").limit(4).select(
-        F.col("vec_id").alias("cluster"),
-        F.col("embedding").cast("array<double>").alias("c"),
-    )
-    plan = K.assign_clusters(emb, cents)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "SortMergeJoin" not in plan, "centroid join must not shuffle the vectors"
-
-
-def test_iteration_reuses_vector_partitioning(spark, sf_dir):
-    """After the one-time id-partitioning, an iteration's assign window
-    and update join must NOT re-exchange the vector relation — the only
-    per-iteration exchange is the (cluster, pos) mean aggregation."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = K.prepared_vectors(emb)
-    cents = v.orderBy("vec_id").limit(4).select(
-        F.col("vec_id").alias("cluster"), F.col("embedding").alias("c")
-    ).localCheckpoint()
-    assignment = K.assign_clusters(v, cents)
-    updated = K.update_centroids(v, assignment)
-    plan = updated._jdf.queryExecution().executedPlan().toString()
-    # the cached plan's one-time REPARTITION_BY_NUM fill shows up inside
-    # the InMemoryRelation display; what must NOT exist is a runtime
-    # ENSURE_REQUIREMENTS re-exchange of the vectors by id
+def test_fit_never_shuffles_joins_or_windows_the_vectors(spark, sf_dir, monkeypatch):
+    """Centroids stay on the driver: no plan of the fit joins, windows or
+    exchanges the vectors by id, and each Lloyd round's one exchange is
+    the map-combined (cluster, pos) mean aggregation."""
     import re
 
-    runtime_vec_exchanges = re.findall(
-        r"Exchange hashpartitioning\(vec_id[^\n]*ENSURE_REQUIREMENTS", plan
-    )
-    assert not runtime_vec_exchanges, plan[:2500]
-    v.unpersist()
+    emb = load_table(spark, sf_dir, "embeddings")
+    DataFrame = type(emb)
+    plans = []
+    collect = DataFrame.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", recording_collect)
+    out = K.lloyd_iterations(emb, k=4, iters=2)
+    monkeypatch.undo()
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+    assert len(plans) == 4, "expected seeds + 2 rounds + the lazy result"
+    for plan in plans:
+        assert "Join" not in plan, plan[:2500]
+        assert "Window" not in plan, plan[:2500]
+        assert not re.search(r"hashpartitioning\(vec_id", plan), plan[:2500]
+    for plan in plans[1:3]:
+        keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+        assert keys and all(
+            re.fullmatch(r"cluster#\d+L?, pos#\d+, \d+", key) for key in keys
+        ), plan[:2500]
+    assert "Exchange" not in plans[3], "the final assignment must be map-only"
+
+
+def test_centroid_constant_round_trips_doubles_exactly(spark):
+    import struct
+
+    values = [0.1 + 0.2, 1e-300, -0.0, 5e-324, 1.7976931348623157e308, -2.5]
+    row = spark.range(1).select(
+        K.centroid_column([(7, values), (-3, [1.0, None])]).alias("c")
+    ).first()
+    bits = lambda xs: [None if x is None else struct.pack(">d", x) for x in xs]  # noqa: E731
+    assert [r.cluster for r in row.c] == [7, -3]
+    assert bits(row.c[0].c) == bits(values)
+    assert bits(row.c[1].c) == bits([1.0, None])

@@ -143,6 +143,39 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     assert out.agg({"k": "sum"}).first()[0] == sum(range(10_000))
 
 
+def test_compact_parquet_failed_write_keeps_originals(spark, tmp_path):
+    """The rewrite is staged beside the table and swapped in only after
+    it succeeded: a write that fails (here: the staging path is taken by
+    a regular file) leaves every original file and row in place."""
+    import glob
+
+    import pytest
+
+    from celeborn_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(0, 5_000).repartition(20).write.parquet(path)
+    before = sorted(glob.glob(path + "/*"))
+    (tmp_path / "t.compact-staging").write_text("not a directory")
+    with pytest.raises(Exception):
+        compact_parquet(spark, path, target_file_bytes=1 << 20)
+    assert sorted(glob.glob(path + "/*")) == before
+    assert spark.read.parquet(path).count() == 5_000
+    assert (tmp_path / "t.compact-staging").read_text() == "not a directory"
+
+
+def test_compact_parquet_leaves_no_staging_directory(spark, tmp_path):
+    import os
+
+    from celeborn_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(0, 5_000).repartition(20).write.parquet(path)
+    assert compact_parquet(spark, path, target_file_bytes=1 << 20) == 1
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert spark.read.parquet(path).count() == 5_000
+
+
 def test_compact_parquet_rejects_object_store_paths(spark):
     """os.walk sizing sees 0 bytes on s3a://hdfs:// paths -> the whole
     dataset would be rewritten into ONE file; fail loudly instead
